@@ -111,7 +111,11 @@ class JobConfig:
                                   # batches (0 = manual compact_deltas())
     broadcast_merge_threshold: int = 500_000
                                   # cow merge: staged batches at or below this
-                                  # row count use the broadcast plan (target
+                                  # row count merge on the driver (one
+                                  # collect, Arrow kernel, pyarrow write)
+                                  # when their pruned touched files fit
+                                  # plans/merge.py DRIVER_MERGE_MAX_BYTES,
+                                  # else use the broadcast plan (target
                                   # scanned, never shuffled); larger batches
                                   # fall back to the full-outer shuffle join.
                                   # 0 forces the shuffle plan.
@@ -235,6 +239,11 @@ class JobConfig:
             # SURVEY B7); an EXPLICIT empty list is always a config error.
             raise ConfigError("merge mode requires non-empty merge_keys "
                               "(or None to discover from identifier_fields)")
+        if self.mode is ApplyMode.REPLACE and self.before_load:
+            # ref README.md:45: before_load is not supported in replace
+            # mode (the table it would run against is about to be swapped)
+            raise ConfigError("before_load is not supported in mode "
+                              "'replace'")
         for col, typ in self.column_types.items():
             if typ.lower() not in _ALLOWED_TYPES:
                 raise ConfigError(f"column_types[{col!r}]: unsupported type {typ!r}")

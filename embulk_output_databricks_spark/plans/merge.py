@@ -23,31 +23,74 @@ same semantics are one declarative Spark plan:
 The join is a shuffle on the merge keys over the pruned slice only; AQE
 handles skew/strategy (SURVEY.md §4.1). A full-outer join cannot broadcast,
 but the pruned target slice is proportional to the batch, not the table.
+
+Three physical placements of the same semantics, chosen per batch:
+
+  * driver (_driver_merge): a batch at or under the broadcast threshold
+    whose pruned touched files fit DRIVER_MERGE_MAX_BYTES. One Spark
+    action collects the staged batch as Arrow with its bucket ids; the
+    touched files are read with pyarrow, merged by plans/merge_kernel.py
+    and written with pyarrow in the Spark write's layout. Tail batches are
+    bound by fixed cost per Spark action, and this path runs one.
+  * broadcast (broadcast_upsert_plan): the other batches at or under the
+    threshold; the target slice is scanned, never shuffled.
+  * shuffle: the full-outer join above, for larger batches (and the
+    predicted plan that skips the pre-pass in the steady bulk regime).
+
+LAST_PHASES["plan"] names the placement that ran and
+LAST_PHASES["driver_miss"] why a batch did not take the driver.
 """
 
 from __future__ import annotations
 
+import os
+import time
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
-from ..sources.laketable import (LAST_SEQ, ROW_ID, LakeTable, Manifest,
+from ..sources.laketable import (_BUCKET_COL, LAST_SEQ, ROW_ID, LakeTable,
+                                 Manifest, arrow_type,
                                  qcol as _qc, qname as _qn,
                                  _file_nb, _live_data, _merge_key_prunable,
-                                 _split_files, bucket_expr)
+                                 _split_files, _table_checks, bucket_expr)
+from .merge_kernel import OP_COL, merge_kernel
 
-OP_COL = "op"
+# Driver placement: a small COW batch whose pruned touched files hold at
+# most this many bytes merges on the driver (_driver_merge); 0 disables
+# it. Measured against the broadcast plan on local[4] (CHANGES.md), the
+# driver was faster at every size up to 43 MiB (0.58x the wall there), so
+# the cap bounds driver memory instead: Arrow holds the touched rows
+# decompressed, several times their parquet bytes.
+DRIVER_MERGE_MAX_BYTES = 32 << 20
+
 _T_HIT = "__t_present"
 _S_HIT = "__s_present"
 
 # per-call phase walls + plan flags of the last merge_apply (driver-serial
 # attribution: prepass = fused agg job incl. staged persist build; write =
-# data-file write job + commit; `predicted`/`staged_ahead` mark which plan
-# path ran). DIAGNOSTIC, single-writer: consumed by tests
+# data-file write job + commit; `plan` is driver/broadcast/shuffle/eqdel and
+# `predicted`/`staged_ahead` mark which plan path ran; the driver
+# placement's inputs are `staged_rows`, `touched_files`, `touched_bytes`
+# and, on a miss, `driver_miss`). DIAGNOSTIC, single-writer: consumed by tests
 # (test_predictive.py), the cdc_predictive_merge oracle query, and ad-hoc
 # serial-share probes — not by the engine itself. Concurrent per-table
 # applies (streaming/multi.py parallel mode) interleave writes here, so
 # never read it where two merges may overlap.
 LAST_PHASES: dict = {}
 
+
+
+def _eqdel_misses(keys: list[str]):
+    """Count of staged rows the equality-delete fast path cannot apply:
+    upserts (a NULL op is an insert, NOT a delete) and deletes of a key
+    with a NULL component, which the sidecar cannot match (SQL equality)
+    but the merge plans match null-safely."""
+    eqdel_ok = F.coalesce(F.col(OP_COL) == "D", F.lit(False))
+    for k in keys:
+        eqdel_ok = eqdel_ok & _qc(k).isNotNull()
+    return F.count(F.when(~eqdel_ok, 1))
 
 
 def prepass_aggs(m: Manifest, keys: list[str], has_op: bool,
@@ -64,10 +107,7 @@ def prepass_aggs(m: Manifest, keys: list[str], has_op: bool,
     bucketed = bool(m.bucket_key and m.bucket_key in keys)
     aggs = [F.count(F.lit(1)).alias("__n")]
     if delete_path_ok:
-        # NULL op = insert, NOT a delete
-        aggs.append(F.count(F.when(
-            ~F.coalesce(F.col(OP_COL) == "D", F.lit(False)), 1))
-            .alias("__nondel"))
+        aggs.append(_eqdel_misses(keys).alias("__nondel"))
     nbs: list[int] = []
     if bucketed:
         # nb=0 is the "unbucketed" marker (add_files imports), not a real
@@ -208,6 +248,152 @@ def merge_apply_mor(
     return table.append_delta(df, merge_keys=keys, properties=props)
 
 
+def _driver_static_miss(table: LakeTable, m: Manifest, keys: list[str],
+                        merge_rules, guard_col, threshold: int) -> str | None:
+    """Why a merge cannot take the driver placement, judged before any
+    data is seen (None = it may)."""
+    types = {f["name"]: f["type"] for f in m.schema_version.fields}
+    order = [c for c in (m.properties.get("sort_order") or "").split(",")
+             if c in types]
+    prev = getattr(table, "_prev_merge", None) or {}
+    for miss, why in (
+            (DRIVER_MERGE_MAX_BYTES <= 0, "driver placement disabled"),
+            (merge_rules, "merge_rules"),
+            (guard_col is not None, "guard_col"),
+            (threshold <= 0, "broadcast threshold 0 forces the shuffle plan"),
+            (_table_checks(m), "CHECK constraints"),
+            (m.bucket_key and m.bucket_key not in keys,
+             "bucket key is not a merge key"),
+            (prev.get("n_staged", 0) > threshold,
+             "previous batch over the broadcast threshold")):
+        if miss:
+            return why
+    for c, t in types.items():
+        if arrow_type(t) is None:
+            return f"column {c!r} of type {t} has no pyarrow round trip"
+    for c in keys + order:
+        if types[c].startswith("array<"):
+            return f"array-typed key or sort column {c!r}"
+    return None
+
+
+def _driver_selection(m: Manifest, got, keys: list[str], nbs: list[int],
+                      has_op: bool, support_deletes: bool, threshold: int,
+                      file_prune: bool, file_prune_max_keys: int):
+    """Touched-file selection of a collected staged batch `got` (pyarrow,
+    bucket ids under every spec in `nbs` as `__b<nb>`): the same bucket
+    and key pruning as the Spark plans. Returns (miss, selection,
+    key_vals, affected); a non-None miss sends the batch to Spark."""
+    n = got.num_rows
+    if n > threshold:
+        return "staged rows over the broadcast threshold", None, None, None
+    if has_op and support_deletes and n and pc.all(pc.fill_null(
+            pc.equal(got[OP_COL], "D"), False)).as_py() and not any(
+                got[k].null_count for k in keys):
+        return "delete-only batch (equality-delete path)", None, None, None
+    affected = ({nb: set(got[f"__b{nb}"].to_pylist()) for nb in nbs}
+                if nbs else None)
+    sel, _rest = _split_files(m, _live_data(m.files), affected)
+    if any(f.get("kind") == "delta" for f in sel):
+        return "merge-on-read deltas in a touched bucket", None, None, None
+    key_vals: dict = {}
+    if file_prune and n <= file_prune_max_keys:
+        for k in keys:
+            vs = got[k].to_pylist()
+            nn = sorted(v for v in vs if v is not None)
+            key_vals[k] = (nn, len(nn) < len(vs))
+        sel = _merge_key_prunable(m, sel, key_vals)[1]
+    targeted = {t for f in m.files if f.get("kind") in ("posdel", "eqdel")
+                for t in f["targets"]}
+    miss = None
+    for f in sel:
+        if os.path.basename(f["path"]) in targeted:
+            miss = "positional or equality deletes on a touched file"
+        elif f["sv"] != m.current_sv:
+            miss = "touched file under an older schema version"
+        elif m.bucket_key and (_file_nb(m, f) != m.n_buckets
+                               or f.get("bucket") is None):
+            miss = "touched file under another bucket spec"
+        elif f.get("bytes") is None:
+            miss = "touched file without a recorded size"
+        if miss:
+            return miss, None, None, None
+    LAST_PHASES["touched_files"] = len(sel)
+    LAST_PHASES["touched_bytes"] = touched = sum(f["bytes"] for f in sel)
+    if touched > DRIVER_MERGE_MAX_BYTES:
+        return "touched bytes over DRIVER_MERGE_MAX_BYTES", None, None, None
+    return None, sel, key_vals, affected
+
+
+def _driver_merge(table: LakeTable, m: Manifest, staged: DataFrame,
+                  keys: list[str], payload: list[str], has_op: bool,
+                  support_deletes: bool, merge_rules, guard_col,
+                  threshold: int, file_prune: bool, file_prune_max_keys: int,
+                  properties: dict | None, capture) -> Manifest | None:
+    """The driver placement of a small COW merge: ONE Spark action (a
+    toArrow collect of the staged batch with its bucket ids under every
+    spec present — the pre-pass, the key collect and the pruning input in
+    one), a pyarrow read of the kept touched files, merge_kernel, a
+    pyarrow write and the commit. A steady-state tail batch is bound by
+    the fixed cost per Spark action, not by data, and the broadcast plan
+    spends about a dozen jobs per merge.
+
+    Returns the committed manifest, or None with LAST_PHASES["driver_miss"]
+    naming why the batch takes a Spark plan instead: merge_rules,
+    guard_col, CHECK constraints, a batch over the broadcast threshold,
+    delete-only batches (equality-delete path), touched files with MOR,
+    posdel or eqdel state, an older schema version or bucket spec, a
+    column type pyarrow does not round-trip, or touched bytes over
+    DRIVER_MERGE_MAX_BYTES."""
+    miss = _driver_static_miss(table, m, keys, merge_rules, guard_col,
+                               threshold)
+    if miss is None:
+        nbs = (sorted(({_file_nb(m, f) for f in m.files} | {m.n_buckets})
+                      - {0}) if m.bucket_key else [])
+        frame = staged.select("*", *[bucket_expr(m.bucket_key, nb)
+                                     .alias(f"__b{nb}") for nb in nbs])
+        t0 = time.monotonic()
+        got = frame.limit(min(threshold, 2**31 - 2) + 1).toArrow()
+        LAST_PHASES["collect_s"] = round(time.monotonic() - t0, 6)
+        LAST_PHASES["staged_rows"] = got.num_rows
+        miss, selection, key_vals, affected = _driver_selection(
+            m, got, keys, nbs, has_op, support_deletes, threshold,
+            file_prune, file_prune_max_keys)
+    if miss is not None:
+        LAST_PHASES["driver_miss"] = miss
+        return None
+    from .audit_tap import tap
+
+    LAST_PHASES["plan"] = "driver"
+    tap("merge_apply.driver", frame)
+    types = {f["name"]: arrow_type(f["type"]) for f in m.schema_version.fields}
+    cols = [got[c].cast(types[c]) for c in payload]
+    names = list(payload)
+    if has_op:
+        cols.append(got[OP_COL])
+        names.append(OP_COL)
+    if m.bucket_key:
+        cols.append(got[f"__b{m.n_buckets}"])
+        names.append(_BUCKET_COL)
+    rows, changes = merge_kernel(table._arrow_rows(m, selection),
+                                 pa.table(cols, names=names), keys, payload,
+                                 support_deletes)
+    if capture is not None:
+        capture(changes, None)
+    props = dict(properties or {})
+    props.setdefault("operation", "merge")
+    t0 = time.monotonic()
+    out = table.replace_files(selection, rows, props, base=m,
+                              read_keys=key_vals or None)
+    LAST_PHASES["write_s"] = round(time.monotonic() - t0, 6)
+    LAST_PHASES["commit_s"] = round(table.last_commit_s, 6)
+    table._prev_merge = {
+        "n_staged": got.num_rows,
+        "all_buckets": affected is None or all(
+            len(v) >= nb for nb, v in affected.items())}
+    return out
+
+
 def merge_apply(
     table: LakeTable,
     staged: DataFrame,
@@ -222,9 +408,17 @@ def merge_apply(
     predictive: bool = True,
     predictive_min_rows: int = 1_000_000,
     prepass_row=None,
+    capture=None,
 ) -> Manifest:
     """staged: exactly one row per key (run operators.lww_dedup first),
     columns = target payload columns (+ optional `op` I/U/D).
+
+    capture: optional change-row hook `capture(rows, staged)`, called once
+    before the commit — with the kernel's change rows (a pyarrow Table,
+    the `capture_change_rows` contract) when the driver placement runs,
+    else with (None, the cached staged frame) before any Spark plan runs,
+    so the caller derives the rows itself against the still-current
+    snapshot (streaming/cdf.py apply_with_cdf).
 
     guard_col: cross-batch stale-writer guard (the `WHEN MATCHED AND
     S.seq > T.seq` pattern). The batch fence makes EXACT replays no-ops,
@@ -240,7 +434,10 @@ def merge_apply(
     breaks — use COW for guarded tables).
 
     Physical plan is chosen by batch size (the persisted staged count):
-      * small batch (<= broadcast_threshold_rows): broadcast plan — the
+      * small batch whose pruned touched files fit DRIVER_MERGE_MAX_BYTES:
+        driver placement (_driver_merge) — one staged collect, the Arrow
+        kernel and a pyarrow write; no other Spark job.
+      * other small batch (<= broadcast_threshold_rows): broadcast plan — the
         target slice is only SCANNED, never shuffled. One left-outer
         broadcast join decides keep/update/delete per target row; a
         key-pruned semi join finds matched keys; inserts are staged
@@ -302,10 +499,40 @@ def merge_apply(
     )
     persisted = None
     pred_obs = None
+    LAST_PHASES.clear()
     if not predicted and prepass_row is None:
+        # the driver placement collects the batch uncached (a limit over a
+        # cached frame costs two more jobs), so a miss evaluates it again
+        # below — except on a table's first merge, which has no size hint
+        # and may be a bulk load: cache it there
+        if prev is None:
+            persisted = staged = staged.persist()
+        try:
+            out = _driver_merge(
+                table, m, staged, keys, payload, has_op, support_deletes,
+                merge_rules, guard_col, broadcast_threshold_rows,
+                file_prune, file_prune_max_keys, properties, capture)
+        except BaseException:
+            if persisted is not None:
+                persisted.unpersist()
+            raise
+        if out is not None:
+            if persisted is not None:
+                persisted.unpersist()
+            return out
+    if persisted is None and prepass_row is None and (
+            not predicted or capture is not None):
         # prepass_row implies the CALLER persisted staged (stage-ahead
-        # prefetch) and owns that cache's lifecycle
+        # prefetch) and owns that cache's lifecycle; a capture consumes
+        # the batch too, so even the predicted plan keeps it cached
         persisted = staged = staged.persist()
+    if capture is not None:
+        try:
+            capture(None, staged)
+        except BaseException:
+            if persisted is not None:
+                persisted.unpersist()
+            raise
 
     # -- 0+1 fused pre-pass: ONE aggregation job over the (persisting)
     # staged batch computes everything the planner needs before the main
@@ -322,21 +549,18 @@ def merge_apply(
     # re-validated against the CURRENT manifest — a rebucket/compact in
     # between leaves sv unchanged but changes nbs — and on any gap the
     # row is recomputed from the caller-persisted staged cache. --
-    import time as _time
-
     aggs, nbs, delete_path_ok, bucketed = prepass_aggs(
         m, keys, has_op, support_deletes, merge_rules, guard_col)
-    LAST_PHASES.clear()
     if prepass_row is not None:
         d = prepass_row.asDict()
         covered = ("__n" in d
                    and (not delete_path_ok or "__nondel" in d)
                    and all(f"b{nb}" in d for nb in nbs))
         if not covered:
-            _t = _time.monotonic()
+            _t = time.monotonic()
             prepass_row = staged.agg(*aggs).collect()[0]
             LAST_PHASES["prepass_revalidated_s"] = round(
-                _time.monotonic() - _t, 6)
+                time.monotonic() - _t, 6)
         LAST_PHASES["prepass_s"] = 0.0
         LAST_PHASES["staged_ahead"] = True
         row = prepass_row
@@ -351,9 +575,7 @@ def merge_apply(
         if delete_path_ok:
             # a delete-only batch slipping through under prediction must
             # DISARM the next batch (it wants the eq-delete fast path)
-            obs_cols.append(F.count(F.when(
-                ~F.coalesce(F.col(OP_COL) == "D", F.lit(False)), 1))
-                .alias("__nondel"))
+            obs_cols.append(_eqdel_misses(keys).alias("__nondel"))
         if bucketed:
             # re-measure bucket coverage under the CURRENT spec so a
             # stream that narrows to few buckets while staying large
@@ -367,9 +589,9 @@ def merge_apply(
         row = None
         n_staged = prev["n_staged"]  # plan-choice estimate only
     else:
-        _t = _time.monotonic()
+        _t = time.monotonic()
         row = staged.agg(*aggs).collect()[0]
-        LAST_PHASES["prepass_s"] = round(_time.monotonic() - _t, 6)
+        LAST_PHASES["prepass_s"] = round(time.monotonic() - _t, 6)
         n_staged = row["__n"]
 
     # -- 0. delete-only fast path: a batch whose every winner is a 'D'
@@ -385,6 +607,7 @@ def merge_apply(
     if delete_path_ok and row is not None and row["__nondel"] == 0:
         props = dict(properties or {})
         props.setdefault("operation", "merge-eqdel")
+        LAST_PHASES["plan"] = "eqdel"
         out = table.delete_keys(staged.select(*[_qc(k) for k in keys]), properties=props)
         if out.version != m.version:
             # delete-only batches must not arm prediction (they want the
@@ -488,8 +711,9 @@ def merge_apply(
 
     # -- 4. atomic bucket swap --
     from .audit_tap import tap
-    tap("merge_apply." + ("broadcast" if n_staged <= broadcast_threshold_rows
-                          else "shuffle"), result)
+    LAST_PHASES["plan"] = ("broadcast" if n_staged <= broadcast_threshold_rows
+                           else "shuffle")
+    tap("merge_apply." + LAST_PHASES["plan"], result)
     props = dict(properties or {})
     props.setdefault("operation", "merge")
     try:
@@ -497,10 +721,10 @@ def merge_apply(
         # the plan->commit window goes through the validated rebase
         # (commute or CommitConflict), never silent absorption; the staged
         # key values let the rebase prove key-disjoint rival appends safe
-        _t = _time.monotonic()
+        _t = time.monotonic()
         out = table.replace_files(selection, result, props, base=m,
                                   read_keys=key_vals or None)
-        LAST_PHASES["write_s"] = round(_time.monotonic() - _t, 6)
+        LAST_PHASES["write_s"] = round(time.monotonic() - _t, 6)
         LAST_PHASES["commit_s"] = round(table.last_commit_s, 6)
         # arm/refresh the next batch's prediction: actual observed size
         # (the Observation rode the write job when predicted) + whether

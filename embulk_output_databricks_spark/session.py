@@ -8,6 +8,7 @@ Pins the settings every module assumes:
     (SURVEY.md §4.1 'Join strategy for MERGE').
   - shuffle partitions sized to cores for local mode; on a real cluster pass
     an explicit value sized to executors * cores.
+  - a generated-code cache large enough for a steady-state batch's plans.
 """
 
 from __future__ import annotations
@@ -63,6 +64,14 @@ def build_session(
                 os.environ.get("SPARK_GRAFT_OFFHEAP", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        # generated-code cache (static; default 100 classes). One tail
+        # cycle (apply with change feed, rollup, SCD2 history, then a
+        # follower poll and a scan) generates more classes than that; at
+        # the default the LRU evicts what the next batch needs, so a
+        # batch after a poll recompiles ~50 classes with Janino instead
+        # of ~8 (each class then warms up again in the JIT) and its wall
+        # rises from ~2.2 to 3-4 s on local[4]
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     if os.environ.get("SPARK_GRAFT_SCHEDULER", "").upper() == "FAIR":
         # FAIR scheduling with an apply-priority pool split: the replay

@@ -173,6 +173,35 @@ def _type_of(s: str) -> T.DataType:
     return T._parse_datatype_string(s)  # public-ish helper used widely
 
 
+# Column types the driver-side (pyarrow) reader and writer round-trip
+# exactly: Spark reads the files back with the same values and types.
+# Anything else (timestamps, decimals, dates, maps, structs) keeps the
+# Spark write path.
+_ARROW_SCALARS = {
+    "tinyint": "int8", "smallint": "int16", "int": "int32",
+    "bigint": "int64", "float": "float32", "double": "float64",
+    "string": "string", "boolean": "bool_", "binary": "binary",
+}
+
+
+def arrow_type(type_str: str):
+    """pyarrow type of a schema type string (all-nullable), or None when
+    the pyarrow writer cannot round-trip it. Arrays nest one level."""
+    import pyarrow as pa
+
+    if type_str.startswith("array<") and type_str.endswith(">"):
+        inner = _ARROW_SCALARS.get(type_str[6:-1])
+        return pa.list_(getattr(pa, inner)()) if inner else None
+    name = _ARROW_SCALARS.get(type_str)
+    return getattr(pa, name)() if name else None
+
+
+def _arrow_schema(fields: list[tuple[str, str]]):
+    import pyarrow as pa
+
+    return pa.schema([pa.field(n, arrow_type(t)) for n, t in fields])
+
+
 def _dtype_of_field(f: dict) -> T.DataType:
     """DataType of one schema field. For struct columns carrying nested
     field ids ("fields", Iceberg nested-field analog) the sub-list is
@@ -567,6 +596,21 @@ def _merge_key_prunable(m: "Manifest", files: list[dict],
                 break
         (prunable if proven_absent else must).append(f)
     return prunable, must
+
+
+def sort_order_properties(cols: list[str],
+                          rows_per_file: int | None = None) -> dict:
+    """Table properties of a write sort order (LakeTable.set_sort_order).
+    Passing them to create_table gives a table its order in its first
+    snapshot, so no crash window leaves it writing unclustered files."""
+    if rows_per_file is not None and rows_per_file < 1:
+        raise ValueError("rows_per_file must be >= 1")
+    props = {"sort_order": ",".join(cols)}
+    if rows_per_file is not None:
+        props["sort_rows_per_file"] = str(rows_per_file)
+    elif not cols:
+        props["sort_rows_per_file"] = ""
+    return props
 
 
 def _table_checks(m: "Manifest") -> dict[str, str]:
@@ -1164,6 +1208,49 @@ class LakeTable:
         return (self._df_for_files(m, clean, with_row_ids=with_row_ids)
                 .unionByName(resolved))
 
+    def _arrow_rows(self, m: Manifest, files: list[dict]):
+        """Driver-side twin of `_resolve_files(m, files, with_row_ids=True)`
+        for plain data files written under the current schema version with
+        no delta, posdel or eqdel state (the caller checks): one pyarrow
+        Table of the current payload, `_row_id`/`_last_seq` by the v3 read
+        rule (a materialized __row_id/__last_seq wins, else the file's
+        first row id + position and its commit sequence) and, when the
+        table is bucketed, each file's bucket id as `__bucket`."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        schema = _arrow_schema([(f["name"], f["type"])
+                                for f in m.schema_version.fields])
+        out = pa.schema(list(schema) + [pa.field(ROW_ID, pa.int64()),
+                                        pa.field(LAST_SEQ, pa.int64())]
+                        + ([pa.field(_BUCKET_COL, pa.int32())]
+                           if m.bucket_key else []))
+        parts = [out.empty_table()]
+        for f in files:
+            pf = pq.ParquetFile(os.path.join(self.root, f["path"]))
+            have = set(pf.schema_arrow.names)
+            t = pf.read(columns=[c for c in schema.names + [_RID_COL, _LSQ_COL]
+                                 if c in have])
+            n = t.num_rows
+            fr, ls = f.get("fr"), f.get("ls")
+            rid = (pa.array(np.arange(fr, fr + n, dtype=np.int64))
+                   if fr is not None else pa.nulls(n, pa.int64()))
+            lsq = pa.array(np.full(n, ls if ls is not None else 0,
+                                   dtype=np.int64),
+                           mask=np.full(n, ls is None))
+            if _RID_COL in have:  # a rewrite materialized lineage ("ridc")
+                rid = pc.coalesce(t[_RID_COL], rid)
+            if _LSQ_COL in have:
+                lsq = pc.coalesce(t[_LSQ_COL], lsq)
+            cols = [t[c].cast(schema.field(c).type) for c in schema.names]
+            cols += [rid, lsq]
+            if m.bucket_key:
+                cols.append(pa.array(np.full(n, f["bucket"], dtype=np.int32)))
+            parts.append(pa.table(cols, schema=out))
+        return pa.concat_tables(parts)
+
     @staticmethod
     def _mor_split(m: Manifest, files: list[dict],
                    deltas: list[dict]) -> tuple[list[dict], list[dict]]:
@@ -1682,7 +1769,7 @@ class LakeTable:
 
     # ---------- write primitives ----------
 
-    def _write_data_files(self, df: DataFrame, m: Manifest,
+    def _write_data_files(self, df, m: Manifest,
                           extra_fields: list[tuple[str, str]] | None = None,
                           sort_by: list | None = None,
                           rows_per_file: int | None = None,
@@ -1697,19 +1784,21 @@ class LakeTable:
         covers a narrow `sort_by` range and the footer-harvested min/max
         bounds become selective — stats_filter then prunes WITHIN a bucket,
         not just across buckets (the OPTIMIZE ... ZORDER/sort analog).
+
+        `df` may also be a pyarrow Table (the driver-side merge,
+        plans/merge.py): written with pyarrow in the same layout, see
+        _write_arrow_files. Both inputs end in the same footer, bloom and
+        NDV harvest.
         """
         import pyarrow.parquet as pq
 
         cur = m.schema()
-        cols = [qcol(f.name).cast(f.dataType).alias(f.name) for f in cur.fields]
-        cols += [qcol(n).cast(t).alias(n) for n, t in extra_fields or []]
         stats_cols = {
             f.name for f in cur.fields
             if isinstance(f.dataType, (T.ByteType, T.ShortType, T.IntegerType,
                                        T.LongType, T.FloatType, T.DoubleType,
                                        T.StringType))
         }
-        df = df.select(*cols)
         if sort_by is None:
             # table write sort order (set_sort_order): every data write —
             # append, COW merge rewrite, MOR delta, compaction — clusters
@@ -1727,56 +1816,13 @@ class LakeTable:
                 if rows_per_file is None:
                     rows_per_file = int(
                         m.properties.get("sort_rows_per_file") or 0) or None
-        checks = _table_checks(m)
-        obs = check_names = None
-        if checks:
-            from pyspark.sql import Observation
-
-            # CHECK-constraint enforcement rides the write job itself
-            # (Observation API — zero extra pass over the batch, same trick
-            # as the replay driver's per-batch metrics). MOR delete markers
-            # ('D' rows) skip the payload checks: a delete only carries its
-            # key, the rest of the row is not data.
-            guard = ((F.col(_DOP_COL) != "D")
-                     if _DOP_COL in df.columns else None)
-            check_names = sorted(checks)
-            obs = Observation()
-            df = df.observe(obs, *[
-                _violation_count(checks[n], guard).alias(f"c{i}")
-                for i, n in enumerate(check_names)])
         tmp = os.path.join(self.root, f"data/.tmp-{uuid.uuid4().hex}")
-        if m.bucket_key:
-            df = df.withColumn(_BUCKET_COL, bucket_expr(m.bucket_key, m.n_buckets))
-            # one shuffle keyed by bucket: co-locates each bucket's rows so the
-            # write emits few files per bucket instead of n_partitions each.
-            # Callers whose partitions are already bucket-pure (the SPJ
-            # operators emit one bucket per task) skip it — routing is by
-            # VALUE (partitionBy), so a wrong hint only costs extra files,
-            # never correctness.
-            if shuffle:
-                df = df.repartition(_BUCKET_COL)
-            if sort_by:
-                df = df.sortWithinPartitions(_BUCKET_COL, *sort_by)
-            w = df.write.option("compression", _compression_of(m))
-            if rows_per_file:
-                w = w.option("maxRecordsPerFile", rows_per_file)
-            w.partitionBy(_BUCKET_COL).parquet(tmp, mode="overwrite")
+        if isinstance(df, DataFrame):
+            self._write_spark_files(df, m, extra_fields, sort_by,
+                                    rows_per_file, shuffle, tmp)
         else:
-            if sort_by:
-                df = df.sortWithinPartitions(*sort_by)
-            w = df.write.option("compression", _compression_of(m))
-            if rows_per_file:
-                w = w.option("maxRecordsPerFile", rows_per_file)
-            w.parquet(tmp, mode="overwrite")
-        if obs is not None:
-            got = obs.get  # metrics of the finished write job
-            for i, n in enumerate(check_names):
-                bad = got.get(f"c{i}") or 0
-                if bad:
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    raise ConstraintViolation(
-                        f"{self.name}: check {n!r} ({checks[n]}) violated by "
-                        f"{bad} row(s); write rejected, no snapshot committed")
+            self._write_arrow_files(df, m, extra_fields, sort_by,
+                                    rows_per_file, tmp)
         bloom_cols = {
             c for c in (m.properties.get("bloom_columns") or "").split(",") if c
         } & {f.name for f in cur.fields}
@@ -1860,6 +1906,111 @@ class LakeTable:
         entries: list[dict] = [e for e in harvested if e is not None]
         shutil.rmtree(tmp, ignore_errors=True)
         return entries
+
+    def _write_spark_files(self, df: DataFrame, m: Manifest,
+                           extra_fields, sort_by, rows_per_file,
+                           shuffle: bool, tmp: str) -> None:
+        cur = m.schema()
+        cols = [qcol(f.name).cast(f.dataType).alias(f.name) for f in cur.fields]
+        cols += [qcol(n).cast(t).alias(n) for n, t in extra_fields or []]
+        df = df.select(*cols)
+        checks = _table_checks(m)
+        obs = check_names = None
+        if checks:
+            from pyspark.sql import Observation
+
+            # CHECK-constraint enforcement rides the write job itself
+            # (Observation API — zero extra pass over the batch, same trick
+            # as the replay driver's per-batch metrics). MOR delete markers
+            # ('D' rows) skip the payload checks: a delete only carries its
+            # key, the rest of the row is not data.
+            guard = ((F.col(_DOP_COL) != "D")
+                     if _DOP_COL in df.columns else None)
+            check_names = sorted(checks)
+            obs = Observation()
+            df = df.observe(obs, *[
+                _violation_count(checks[n], guard).alias(f"c{i}")
+                for i, n in enumerate(check_names)])
+        if m.bucket_key:
+            df = df.withColumn(_BUCKET_COL, bucket_expr(m.bucket_key, m.n_buckets))
+            # one shuffle keyed by bucket: co-locates each bucket's rows so the
+            # write emits few files per bucket instead of n_partitions each.
+            # Callers whose partitions are already bucket-pure (the SPJ
+            # operators emit one bucket per task) skip it — routing is by
+            # VALUE (partitionBy), so a wrong hint only costs extra files,
+            # never correctness.
+            if shuffle:
+                df = df.repartition(_BUCKET_COL)
+            if sort_by:
+                df = df.sortWithinPartitions(_BUCKET_COL, *sort_by)
+            w = df.write.option("compression", _compression_of(m))
+            if rows_per_file:
+                w = w.option("maxRecordsPerFile", rows_per_file)
+            w.partitionBy(_BUCKET_COL).parquet(tmp, mode="overwrite")
+        else:
+            if sort_by:
+                df = df.sortWithinPartitions(*sort_by)
+            w = df.write.option("compression", _compression_of(m))
+            if rows_per_file:
+                w = w.option("maxRecordsPerFile", rows_per_file)
+            w.parquet(tmp, mode="overwrite")
+        if obs is not None:
+            got = obs.get  # metrics of the finished write job
+            for i, n in enumerate(check_names):
+                bad = got.get(f"c{i}") or 0
+                if bad:
+                    shutil.rmtree(tmp, ignore_errors=True)
+                    raise ConstraintViolation(
+                        f"{self.name}: check {n!r} ({checks[n]}) violated by "
+                        f"{bad} row(s); write rejected, no snapshot committed")
+
+    def _write_arrow_files(self, tbl, m: Manifest, extra_fields, sort_by,
+                           rows_per_file, tmp: str) -> None:
+        """The Spark write's layout from a pyarrow Table on the driver: one
+        `__bucket=<id>` dir per bucket (ids from the input's `__bucket`
+        column — the caller carries Spark-computed bucket ids, since the
+        driver does not re-implement bucket_expr's hash), rows sorted by
+        `sort_by` ascending with NULLs first within each bucket, split into
+        consecutive files of `rows_per_file`, in the table's codec (zstd at
+        parquet-mr's level 3; pyarrow's own default is 1). CHECK constraints
+        are evaluated only by the Spark write, so checked tables refuse."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        if _table_checks(m):
+            raise ValueError(f"{self.name}: CHECK constraints need the Spark "
+                             "write path")
+        schema = _arrow_schema(
+            [(f["name"], f["type"]) for f in m.schema_version.fields]
+            + list(extra_fields or []))
+        codec = _compression_of(m)
+        # no dictionary: like parquet-mr falling back to PLAIN on the
+        # high-cardinality token arrays, where a pyarrow dictionary page
+        # measured 1.7x larger files; no embedded Arrow schema either
+        opts = {"compression": "none" if codec == "uncompressed" else codec,
+                "use_dictionary": False, "store_schema": False}
+        if codec == "zstd":
+            opts["compression_level"] = 3
+        groups = [(tmp, tbl)]
+        if m.bucket_key:
+            ids = tbl[_BUCKET_COL].to_numpy()
+            groups = [(os.path.join(tmp, f"{_BUCKET_COL}={b}"),
+                       tbl.filter(pa.array(ids == b)))
+                      for b in np.unique(ids)]
+        for d, part in groups:
+            if sort_by:
+                part = part.take(pc.sort_indices(
+                    part, sort_keys=[(c, "ascending") for c in sort_by],
+                    null_placement="at_start"))
+            part = part.select(schema.names).cast(schema)
+            step = rows_per_file or max(part.num_rows, 1)
+            os.makedirs(d, exist_ok=True)
+            for i, off in enumerate(range(0, part.num_rows, step)):
+                pq.write_table(part.slice(off, step),
+                               os.path.join(d, f"part-{i:05d}.parquet"),
+                               **opts)
 
     def _commit(
         self,
@@ -3202,14 +3353,14 @@ class LakeTable:
         old = self.read(version=from_version, buckets=changed,
                         schema_as_of=new_m.version)
         new = self.read(version=to_version, buckets=changed)
-        o = old.select(*keys, *val_cols).alias("o")
-        n = new.select(*keys, *val_cols).alias("n")
+        o = old.select(*keys, *val_cols, F.lit(True).alias("__in_o")).alias("o")
+        n = new.select(*keys, *val_cols, F.lit(True).alias("__in_n")).alias("n")
         cond = [o[k].eqNullSafe(n[k]) for k in keys]
         j = o.join(n, cond, "full_outer")
-        # merge keys are never NULL in committed rows, so first-key presence
-        # identifies which side(s) of the full-outer join matched
-        in_old = o[keys[0]].isNotNull()
-        in_new = n[keys[0]].isNotNull()
+        # presence flags, not key nullness, say which side(s) matched: the
+        # merge matches keys null-safely, so a NULL key is a committed key
+        in_old = o["__in_o"].isNotNull()
+        in_new = n["__in_n"].isNotNull()
         same = None
         for c in val_cols:
             eq = o[c].eqNullSafe(n[c])
@@ -3231,7 +3382,7 @@ class LakeTable:
         )
         return out.filter(F.col("__op").isNotNull())
 
-    def replace_files(self, remove_buckets, add_df: DataFrame,
+    def replace_files(self, remove_buckets, add_df,
                       properties: dict | None = None,
                       base: Manifest | None = None,
                       read_keys: dict | None = None) -> Manifest:
@@ -3248,6 +3399,9 @@ class LakeTable:
         with_row_ids=True and threaded it through), the ids are materialized
         physically so carried rows keep their lineage across the rewrite;
         NULL ids (e.g. merge inserts) inherit fresh ones at read time.
+        `add_df` may be a pyarrow Table instead (the driver-side merge);
+        for a bucketed table it then carries each row's bucket id as
+        `__bucket` (see _write_arrow_files).
 
         `base`: the manifest the caller PLANNED (read) against. Passing it
         makes the whole plan->commit window race-safe: a rival commit in
@@ -3270,12 +3424,15 @@ class LakeTable:
             _sel, keep = _split_files(base, _live_data(base.files),
                                       remove_buckets)
         extra = None
-        if ROW_ID in add_df.columns:
-            add_df = add_df.withColumnRenamed(ROW_ID, _RID_COL)
-            extra = [(_RID_COL, "bigint")]
-            if LAST_SEQ in add_df.columns:
-                add_df = add_df.withColumnRenamed(LAST_SEQ, _LSQ_COL)
-                extra.append((_LSQ_COL, "bigint"))
+        if isinstance(add_df, DataFrame):
+            if ROW_ID in add_df.columns:
+                add_df, extra = _carry_lineage(add_df)
+        elif ROW_ID in add_df.column_names:
+            # pyarrow Table (the driver-side merge) carries both columns
+            phys = {ROW_ID: _RID_COL, LAST_SEQ: _LSQ_COL}
+            add_df = add_df.rename_columns(
+                [phys.get(c, c) for c in add_df.column_names])
+            extra = [(_RID_COL, "bigint"), (_LSQ_COL, "bigint")]
         new = self._write_data_files(add_df, base, extra_fields=extra)
         if extra:
             for e in new:
@@ -4117,14 +4274,8 @@ class LakeTable:
                       if by_name[c]["type"].startswith("map<")]
         if unsortable:
             raise ValueError(f"sort_order columns not orderable: {unsortable}")
-        if rows_per_file is not None and rows_per_file < 1:
-            raise ValueError("rows_per_file must be >= 1")
-        props = dict(properties or {})
-        props["sort_order"] = ",".join(cols)
-        if rows_per_file is not None:
-            props["sort_rows_per_file"] = str(rows_per_file)
-        elif not cols:
-            props["sort_rows_per_file"] = ""
+        props = {**(properties or {}),
+                 **sort_order_properties(cols, rows_per_file)}
         props.setdefault("operation", "set-sort-order")
         return self._commit(base, base.files, props)
 

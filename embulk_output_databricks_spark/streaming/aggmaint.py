@@ -82,9 +82,9 @@ def apply_agg_deltas(
     """MERGE per-group deltas into the aggregate table: new totals are
     current + delta; a group whose maintained row count reaches zero is
     DELETED (so the rollup never accretes dead groups). Zero-shuffle on
-    the aggregate side: the (small) delta frame broadcasts against two
-    scans of the agg table — once to fetch current totals, once inside
-    merge_apply's broadcast plan."""
+    the aggregate side: the (small) delta frame broadcasts against a scan
+    of the agg table to fetch current totals, inside the merge's single
+    staged collect when it takes the driver placement."""
     cur = agg_tbl.read()
     measure_cols = [c for c in cur.columns if c not in group_cols and c != N_COL]
     d = deltas.alias("D")
@@ -195,16 +195,13 @@ def sync_rollup(base: LakeTable, agg_tbl: LakeTable, keys: list[str],
         return None
     from .cdf import keyed_changes  # write-time CDF when available
     d = keyed_changes(base, upto, keys, to_version=cur)
-    deltas = agg_deltas(d, group_cols, _sum_measures(sum_cols)).persist()
-    try:
-        props = {WATERMARK_PROP: str(cur)}
-        if deltas.count() == 0:
-            # nothing changed in the interval: advance the watermark only
-            return agg_tbl.update_properties(props)
-        return apply_agg_deltas(agg_tbl, deltas, group_cols,
-                                properties=props)
-    finally:
-        deltas.unpersist()
+    # the deltas are evaluated once, by the merge itself: an interval with
+    # no change stages no row, and the merge's commit then rewrites no
+    # file — a watermark-only commit
+    return apply_agg_deltas(agg_tbl, agg_deltas(d, group_cols,
+                                                _sum_measures(sum_cols)),
+                            group_cols,
+                            properties={WATERMARK_PROP: str(cur)})
 
 
 def maintain_agg(

@@ -20,7 +20,10 @@ Capture (`apply_with_cdf`) wraps the ordinary keyed MERGE:
                                      #   no-op updates dropped (diff parity)
       -> stage change rows           # written BEFORE the merge (pinned to
                                      #   the pre-merge snapshot)
-      -> merge_apply(...)            # the unchanged COW commit
+      -> merge_apply(...)            # the unchanged COW commit (a merge
+                                     #   on the driver placement hands
+                                     #   over its kernel's change rows
+                                     #   instead of the three steps above)
       -> rename into cdf/v{N}/       # one atomic dir rename, named by the
                                      #   committed version
 
@@ -50,11 +53,12 @@ import shutil
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.merge import OP_COL, merge_apply
-from ..sources.laketable import LakeTable
+from ..sources.laketable import LakeTable, qname
 
 CDF_DIR = "cdf"
 
@@ -98,19 +102,22 @@ def capture_change_rows(table: LakeTable, staged: DataFrame,
          else F.lit(None).cast("string").alias(OP_COL)))
 
     key_rows = s.select(*keys).distinct().limit(max_lookup_keys + 1).collect()
-    if len(key_rows) <= max_lookup_keys:
-        vals = sorted({r[keys[0]] for r in key_rows if r[keys[0]] is not None})
-        old = table.read(eq_filter={keys[0]: vals}) if vals \
+    firsts = {r[keys[0]] for r in key_rows}
+    if len(key_rows) <= max_lookup_keys and None not in firsts:
+        old = table.read(eq_filter={keys[0]: sorted(firsts)}) if firsts \
             else table.read().limit(0)
     else:
-        old = table.read()
-    old = old.join(s.select(*keys).distinct(), keys, "left_semi")
+        old = table.read()  # an IN-list lookup cannot find a NULL key
+    sk = s.select(*keys).distinct().alias("SK")
+    old = old.alias("O").join(
+        sk, [F.col(f"O.{qname(k)}").eqNullSafe(F.col(f"SK.{qname(k)}"))
+             for k in keys], "left_semi")
 
     t = old.select(*[F.col(c).alias(f"__t_{c}") for c in payload],
                    F.lit(True).alias("__t_matched"))
-    # plain equi-join: NULL-key staged rows never match, exactly like the
-    # merge's own join (they become inserts)
-    cond = [F.col(k) == F.col(f"__t_{k}") for k in keys]
+    # null-safe, like the merge's own join: a NULL key component matches
+    # a committed NULL, so the row is an update, not an insert
+    cond = [F.col(k).eqNullSafe(F.col(f"__t_{k}")) for k in keys]
     j = s.join(t, cond, "left_outer")
     matched = F.coalesce(F.col("__t_matched"), F.lit(False))
     is_del = (F.col(OP_COL) == "D") if support_deletes else F.lit(False)
@@ -138,32 +145,39 @@ def apply_with_cdf(table: LakeTable, staged: DataFrame, keys: list[str],
                    max_lookup_keys: int = 100_000,
                    **merge_kw):
     """merge_apply + change-data-feed capture. Returns the new manifest.
-    The change rows are MATERIALIZED before the merge (they describe the
-    pre-merge state) into a temp dir, then renamed to cdf/v{N} after the
-    commit — one atomic inode op; a crash in between degrades that version
-    to the diff fallback."""
+    The change rows are MATERIALIZED before the merge commits (they
+    describe the pre-merge state) into a temp dir, then renamed to
+    cdf/v{N} after the commit — one atomic inode op; a crash in between
+    degrades that version to the diff fallback. A merge that takes the
+    driver placement hands over the Arrow kernel's change rows (written
+    with pyarrow); a Spark plan has them derived by capture_change_rows."""
     if merge_kw.get("merge_rules") or merge_kw.get("guard_col"):
         raise ValueError("CDF capture does not support merge_rules/guard_col"
                          " — use plain merge_apply (consumers fall back to"
                          " diff)")
-    staged = staged.persist()  # consumed by the capture AND the merge
     tmp = os.path.join(table.root, CDF_DIR,
                        f"_tmp-{uuid.uuid4().hex}")
-    try:
-        changes = capture_change_rows(table, staged, keys,
+
+    def capture(rows, cached) -> None:
+        # both writes leave >= 1 footer, so an all-no-op batch still
+        # records an EMPTY feed (a gap would force a diff)
+        if rows is not None:  # the driver-side merge's own change rows
+            os.makedirs(tmp)
+            pq.write_table(rows, os.path.join(tmp, "part-00000.parquet"))
+            return
+        # a Spark plan: derive them from the merge's cached batch
+        changes = capture_change_rows(table, cached, keys,
                                       support_deletes=support_deletes,
                                       max_lookup_keys=max_lookup_keys)
-        # repartition(1)+parquet always leaves >= 1 footer, so an all-no-op
-        # batch still records an EMPTY feed (a gap would force a diff)
         changes.repartition(1).write.mode("overwrite").parquet(tmp)
+
+    try:
         m = merge_apply(table, staged, keys,
                         support_deletes=support_deletes,
-                        properties=properties, **merge_kw)
+                        properties=properties, capture=capture, **merge_kw)
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
-    finally:
-        staged.unpersist()
     final = _cdf_path(table, m.version)
     shutil.rmtree(final, ignore_errors=True)  # fence re-run: last write wins
     os.replace(tmp, final)

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans.merge import OP_COL, merge_apply
-from ..sources.laketable import LakeTable
+from ..sources.laketable import LakeTable, sort_order_properties
 
 UPTO_A_PROP = "join_upto_fact"  # fact version the view has consumed
 UPTO_B_PROP = "join_upto_dim"   # dim version the view has consumed
@@ -97,8 +97,9 @@ def ensure_join_view(catalog, fact: LakeTable, dim: LakeTable, name: str,
     schema = view_schema(fact, dim, dim_cols)
     t = catalog.create_table(name, schema, n_buckets=fact.manifest().n_buckets,
                              bucket_key=fact_key,
-                             properties={"merge_keys": fact_key})
-    t.set_sort_order([fact_key], rows_per_file=rows_per_file)
+                             properties={"merge_keys": fact_key,
+                                         **sort_order_properties(
+                                             [fact_key], rows_per_file)})
     va, vb = fact.current_version(), dim.current_version()
     fa = fact.read(version=va).alias("A")
     db = dim.read(version=vb).select(

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.merge import OP_COL, merge_apply
-from ..sources.laketable import LakeTable
+from ..sources.laketable import LakeTable, sort_order_properties
 
 VALID_FROM = "valid_from"   # event time this version became true
 VALID_TO = "valid_to"       # event time it stopped (NULL = still open)
@@ -82,11 +82,11 @@ def ensure_scd2(catalog, name: str, base_schema: T.StructType,
     rewrite per batch."""
     if catalog.table_exists(name):
         return catalog.load(name)
-    t = catalog.create_table(
+    return catalog.create_table(
         name, scd2_schema(base_schema, ts_col), n_buckets=n_buckets,
-        bucket_key=keys[0], properties=properties)
-    t.set_sort_order([keys[0], VALID_FROM], rows_per_file=rows_per_file)
-    return t
+        bucket_key=keys[0],
+        properties={**(properties or {}), **sort_order_properties(
+            [keys[0], VALID_FROM], rows_per_file)})
 
 
 def _open_rows(tbl: LakeTable, keys: list[str],

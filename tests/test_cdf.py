@@ -160,6 +160,34 @@ def test_consumers_sync_from_cdf(spark, warehouse):
     assert got == want
 
 
+@pytest.mark.parametrize("budget", [None, 0])  # driver, broadcast plan
+def test_null_key_update_is_one_update_everywhere(spark, warehouse,
+                                                  monkeypatch, budget):
+    """A committed NULL merge key is a key: re-upserting it updates the
+    row in place, and the feed, diff and rollup all see one update — not
+    an insert beside a stale row (the rollup once counted it twice)."""
+    from embulk_output_databricks_spark.plans import merge as M
+    from embulk_output_databricks_spark.streaming.aggmaint import (
+        ensure_rollup, sync_rollup)
+
+    if budget is not None:
+        monkeypatch.setattr(M, "DRIVER_MERGE_MAX_BYTES", budget)
+    cat, t = _mk(spark, warehouse)
+    t.append(spark.createDataFrame([(None, "A", 10)], BASE))
+    roll = ensure_rollup(cat, t, "roll", group_cols=["grp"], sum_cols=["v"])
+    v1 = t.current_version()
+    apply_with_cdf(t, _staged(spark, [(None, "A", 11, "U")]), keys=["k"])
+    assert t.read().filter(F.col("k").isNull()).count() == 1
+    want = [("U", None, "A", 11, "A", 10)]
+    assert _rows(change_feed(t, v1)) == want
+    assert _rows(t.diff(v1, keys=["k"], include_old=True)) == want
+    sync_rollup(t, roll, keys=["k"], group_cols=["grp"], sum_cols=["v"])
+    assert sorted(tuple(r) for r in roll.read().collect()) == sorted(
+        tuple(r) for r in t.read().groupBy("grp").agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("v").alias("sum_v")).collect())
+
+
 def test_follower_keyed_feed_from_cdf(spark, warehouse, tmp_path):
     """TableFollower keys mode served from write-time capture: a replica
     applying the frames converges to the table state across CDF-captured

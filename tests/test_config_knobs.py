@@ -178,3 +178,13 @@ def test_negative_target_apply_seconds_rejected():
 
     with pytest.raises(ConfigError, match="target_apply_seconds"):
         JobConfig(target_apply_seconds=-1)
+
+
+def test_before_load_rejected_in_replace_mode():
+    """Reference parity: before_load is not supported in replace mode."""
+    from embulk_output_databricks_spark.config import ConfigError
+
+    with pytest.raises(ConfigError, match="before_load"):
+        JobConfig(mode="replace", before_load="SELECT 1")
+    JobConfig(mode="replace", after_load="SELECT 1")
+    JobConfig(mode="merge", before_load="SELECT 1")

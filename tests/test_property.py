@@ -6,7 +6,7 @@ Spark round-trips are expensive, so examples are batched: hypothesis
 generates a LIST of cases and each property runs them through one Spark job.
 """
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -244,13 +244,13 @@ _CDF_SCHEMA = _T.StructType([
 ])
 
 initial_state = st.dictionaries(
-    st.integers(min_value=0, max_value=7),
+    st.one_of(st.none(), st.integers(min_value=0, max_value=7)),
     st.tuples(st.sampled_from(["A", "B", None]),
               st.one_of(st.none(), st.integers(-9, 9))),
     max_size=8,
 )
 staged_batch = st.dictionaries(
-    st.integers(min_value=0, max_value=9),
+    st.one_of(st.none(), st.integers(min_value=0, max_value=9)),
     st.tuples(st.sampled_from(["A", "B", "C", None]),
               st.one_of(st.none(), st.integers(-9, 9)),
               st.sampled_from(["U", "D"])),
@@ -261,11 +261,13 @@ staged_batch = st.dictionaries(
 @settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(initial_state, staged_batch)
+@example(init={None: ("A", None)},  # delete-only batch with a NULL key
+         batch={None: ("A", None, "D"), 0: ("A", None, "D")})
 def test_cdf_capture_equals_diff(spark, tmp_path_factory, init, batch):
     """Store-on-write capture == compute-on-read diff for ANY initial
-    state and staged batch (overlapping keys, NULL payloads, no-op
-    updates, deletes of absent keys) — two independent derivations of the
-    same change set."""
+    state and staged batch (overlapping keys, NULL keys, NULL payloads,
+    no-op updates, deletes of absent keys) — two independent derivations
+    of the same change set."""
     wh = str(tmp_path_factory.mktemp("cdfprop") / _uuid.uuid4().hex)
     cat = LakeCatalog(spark, wh)
     t = cat.create_table("t", _CDF_SCHEMA, n_buckets=2, bucket_key="k")
@@ -280,9 +282,11 @@ def test_cdf_capture_equals_diff(spark, tmp_path_factory, init, batch):
     feed = change_feed(t, v1)
     assert feed is not None
     cols = ["__op", "k", "grp", "v", "__old_grp", "__old_v"]
-    got = sorted(tuple(r[c] for c in cols) for r in feed.collect())
-    want = sorted(tuple(r[c] for c in cols)
-                  for r in t.diff(v1, keys=["k"], include_old=True).collect())
+    got = sorted((tuple(r[c] for c in cols) for r in feed.collect()),
+                 key=repr)
+    want = sorted((tuple(r[c] for c in cols) for r in
+                   t.diff(v1, keys=["k"], include_old=True).collect()),
+                  key=repr)
     assert got == want
 
 

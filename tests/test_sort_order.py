@@ -123,3 +123,29 @@ def test_validation(spark, warehouse):
     ]), n_buckets=1, bucket_key="k")
     with pytest.raises(ValueError, match="orderable"):
         mt.set_sort_order(["mp"])
+
+
+def test_views_carry_sort_order_from_their_creation_commit(spark, warehouse):
+    """SCD2 histories and join views get their sort order in the creation
+    commit: no crash window leaves them writing unclustered files."""
+    from embulk_output_databricks_spark.streaming.joinmaint import (
+        ensure_join_view)
+    from embulk_output_databricks_spark.streaming.scd2 import ensure_scd2
+
+    cat = LakeCatalog(spark, warehouse)
+    base = T.StructType([T.StructField("k", T.LongType()),
+                         T.StructField("ts", T.LongType())])
+    hist = ensure_scd2(cat, "h", base, keys=["k"], ts_col="ts",
+                       rows_per_file=100)
+    assert hist.current_version() == 0
+    assert hist.manifest(0).properties["sort_order"] == "k,valid_from"
+    assert hist.manifest(0).properties["sort_rows_per_file"] == "100"
+    dim = cat.create_table("dim", T.StructType(
+        [T.StructField("dk", T.LongType()),
+         T.StructField("code", T.LongType())]), bucket_key="dk")
+    fact = cat.create_table("fact", T.StructType(
+        [T.StructField("k", T.LongType()),
+         T.StructField("fk", T.LongType())]), bucket_key="k")
+    view = ensure_join_view(cat, fact, dim, "v", "k", "fk", "dk", ["code"])
+    first = view.manifest(0).properties
+    assert first["sort_order"] == "k" and first["sort_rows_per_file"] == "65536"

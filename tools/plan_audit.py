@@ -90,7 +90,7 @@ AUDITED = [
     "emb_neardup",
     "dedup_simhash_pairs",
     # round-3 regime machinery: the inner merge taps show which plan path
-    # each batch took (broadcast/shuffle; predictive runs tap the same
+    # each batch took (driver/broadcast/shuffle; predictive runs tap the same
     # write plan they would have pre-passed for)
     "cdc_auto_strategy",
     "cdc_stage_ahead",
